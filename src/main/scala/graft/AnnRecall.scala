@@ -1,10 +1,10 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.VectorOps
 
-/** ANN recall-vs-cost measurement (round-8 VERDICT next-round #4): four
+/** ANN recall-vs-cost measurement: four
   * sweeps, each against the ground truth of its own metric —
   *
   *  - `sim_ann` multi-probe radius 0/1/2 bit flips, vs brute-force COSINE
@@ -38,24 +38,15 @@ object AnnRecall {
     val dir =
       if (args.nonEmpty) args(0)
       else sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Widened query/corpus split (round 16 — round-15 VERDICT #2: 5
-    // queries × AnnTopK = 25 ground-truth pairs was weak statistical
-    // evidence for recall claims this central). The measurement runs the
-    // SHIPPED operators under the session split override; the gated
-    // registry keeps the default (its oracles hardcode it). 50 queries →
-    // 250 ground-truth pairs per sweep. Env-overridable for quick runs.
-    // Parsed eagerly (round-16 ADVICE): a non-numeric env value must fail
-    // at startup with a clear message, not surface as invalid JSON output
-    // or a deep .toLong inside an operator.
+    val spark = GraftSession.local()
+    // Widened query/corpus split: 5 queries × AnnTopK = 25 ground-truth
+    // pairs is weak statistical evidence for a recall claim. The
+    // measurement runs the SHIPPED operators under the session split
+    // override; the gated registry keeps the default (its oracles hardcode
+    // it). 50 queries → 250 ground-truth pairs per sweep. Env-overridable
+    // for quick runs. Parsed eagerly: a non-numeric env value must fail at
+    // startup with a clear message, not surface as invalid JSON output or
+    // a deep .toLong inside an operator.
     val qSet: Long = sys.env.get("SPARK_GRAFT_QUERYSET").map { s =>
       try s.trim.toLong catch {
         case _: NumberFormatException =>
@@ -74,7 +65,7 @@ object AnnRecall {
       BigDecimal(x).setScale(4, BigDecimal.RoundingMode.HALF_UP).toString
 
     // The whole measurement runs under the widened query-set split; unset
-    // it exception-safely (round-16 ADVICE) so an in-process caller never
+    // it exception-safely so an in-process caller never
     // leaks the override into gated queries whose oracles hardcode the
     // default.
     try {
@@ -84,9 +75,8 @@ object AnnRecall {
         timed(pairs(VectorOps.simTopk(spark, dir).filter(col("rn") <= VectorOps.AnnTopK)))
       val rows = scala.collection.mutable.ArrayBuffer.empty[String]
       // one row formatter for every sweep; `truth` is the ground-truth pair
-      // set of the sweep's own metric (round-12 ADVICE: row/rowVs/rowMips
-      // differed only in the recall denominator)
-      // ci95 (round-16 VERDICT #7): binomial error bar 1.96·√(r(1−r)/n) over
+      // set of the sweep's own metric. ci95 is the binomial error bar
+      // 1.96·√(r(1−r)/n) over
       // the n ground-truth pairs — 0.95-vs-1.0 distinctions drive the
       // ADC-vs-rerank recommendation and need the interval published.
       def row(op: String, conf: Long, truth: Set[(Long, Long)],
@@ -97,8 +87,7 @@ object AnnRecall {
           s""""recall":${fmt(r)},"ci95":${fmt(ci)},"n_truth":${truth.size},""" +
           s""""secs":${fmt(sec)},"scored_pairs":$scored}""")
       }
-      // Every conf-driven sweep unsets its conf in `finally` (round-15
-      // ADVICE): an exception mid-sweep would otherwise leave the session
+      // Every conf-driven sweep unsets its conf in `finally`: an exception mid-sweep would otherwise leave the session
       // conf set, and any later gated query in the same session would
       // silently diverge from its oracle, which hardcodes the default.
       def sweep(conf: String)(body: => Unit): Unit =
@@ -111,7 +100,7 @@ object AnnRecall {
           row("sim_ann", flips, want, got, sec, VectorOps.annCandidates(spark, dir).count())
         }
       }
-      // round-9 ADVICE: the centroid frame is probe-count independent — hoist
+      // the centroid frame is probe-count independent — hoist
       // it out of the sweep (the per-probe candidate count still re-runs, its
       // result genuinely depends on the nProbe conf set each iteration).
       val cent = VectorOps.labelMeanCentroids(emb)
@@ -123,7 +112,7 @@ object AnnRecall {
         }
       }
 
-      // sim_ivfpq sweep (round-10 VERDICT next-round #4): nProbe × {ADC,
+      // sim_ivfpq sweep: nProbe × {ADC,
       // exact-rerank}. Ground truth here is exact squared-L2 top-k (the
       // metric IVF-PQ ranks in — cosine ground truth would conflate metric
       // mismatch with index loss); the label-mean coarse book has 10 lists,
@@ -149,14 +138,14 @@ object AnnRecall {
         }
       }
 
-      // sim_mips_ivf sweep (round-12 VERDICT #2): MIPS ground truth is the
+      // sim_mips_ivf sweep: MIPS ground truth is the
       // brute-force DOT ranking (sim_mips capped at AnnTopK) — cosine truth
       // would conflate the metric change with index loss. Probes sweep the
       // same axis as sim_ivf; nProbes = 10 (the label-mean book's list
       // count) is exhaustive, where the norm-augmentation identity makes
       // recall exactly 1.0 (asserted as a law in VectorOpsSpec). The
       // augmented frame + centroids are probe-independent — hoisted out of
-      // the loop like the sim_ivf sweep (round-12 ADVICE).
+      // the loop like the sim_ivf sweep.
       val mipsWant = pairs(
         VectorOps.simMips(spark, dir).filter(col("rn") <= VectorOps.AnnTopK))
       val (mipsAug, mipsCent) = VectorOps.mipsIvfParts(emb)
@@ -169,7 +158,7 @@ object AnnRecall {
         }
       }
 
-      // sim_mrl sweep (round 13): rerank-pool size C against the cosine
+      // sim_mrl sweep: rerank-pool size C against the cosine
       // ground truth (the metric MRL ranks in). scored_pairs is the STAGE-2
       // exact-rerank pool (C × queries, from the operator's own candidate
       // frame); stage 1 additionally scores |corpus| × queries pairs at
@@ -188,7 +177,7 @@ object AnnRecall {
         }
       }
 
-      // sim_hamming sweep (round 14): rerank-pool size C against the cosine
+      // sim_hamming sweep: rerank-pool size C against the cosine
       // ground truth. scored_pairs is the stage-2 exact-rerank pool; stage 1
       // additionally Hamming-scores |corpus| x queries pairs at two
       // XOR+popcounts per pair — integer ops on the signature column family,
@@ -205,7 +194,7 @@ object AnnRecall {
         }
       }
 
-      // sim_hnsw sweep (round 15): beam width against the cosine ground
+      // sim_hnsw sweep: beam width against the cosine ground
       // truth. scored_pairs is the VISITED set (every (query, node) the
       // beam touched and scored) — unlike IVF's probe fraction this is
       // corpus-size independent (iters x beam x degree), the graph-index
@@ -213,9 +202,8 @@ object AnnRecall {
       // exhaustive beam is NOT asserted to hit 1.0 (the bounded-iteration
       // contract) — the sweep MEASURES where the curve saturates.
       // stage the graph BEFORE the sweep: the first sim_hnsw invocation
-      // otherwise pays the one-time index build, which landed inside the
-      // lowest-beam row's wall time (round 15's "beam 8 slower than beam
-      // 32" artifact was exactly this)
+      // otherwise pays the one-time index build inside the lowest-beam
+      // row's wall time (which then reads slower than a wider beam)
       VectorOps.hnswStaged(spark, dir)
       sweep(VectorOps.HnswBeamConf) {
         for (c <- Seq(VectorOps.HnswBeam.toLong, 4L * VectorOps.HnswBeam,
@@ -227,7 +215,7 @@ object AnnRecall {
         }
       }
 
-      // sim_hnsw ITERS ladder (round-16 VERDICT #6): on the hard 1× random
+      // sim_hnsw ITERS ladder: on the hard 1× random
       // geometry, is the 3-round expansion cap or the graph's reachability
       // binding beam-8 recall? The conf (default pinned for the gated
       // oracle) widens only here; rows are keyed iters·100 + beam so one

@@ -1,36 +1,32 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
 
-/** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR.
+/** Benchmark main: times every registered query at SPARK_GRAFT_SF_DIR on
+  * a [[GraftSession.local]] session.
   *
   * Each query is forced through full materialization of its physical plan
   * (`queryExecution.toRdd` + a count over the InternalRows) — a plain
   * `df.count()` would let Catalyst prune per-row projections, under-measuring
-  * exactly the compute-heavy queries (round-1 VERDICT "What's wrong" #4).
+  * exactly the compute-heavy queries.
   *
-  * Measurement protocol (round-3: interleaved median-of-N; round-4: made
-  * SELF-DIAGNOSING): one untimed warm-up pass over the whole inventory
+  * Measurement protocol: one untimed warm-up pass over the whole inventory
   * (absorbs whole-stage codegen, JIT and IO warmup), then
   * SPARK_GRAFT_BENCH_RUNS measured passes (default 3), INTERLEAVED — pass 1
   * runs q1..qN, then pass 2 runs q1..qN again, and so on. The recorded
   * number per query is the MEDIAN across passes, with the max−min spread
-  * published alongside it. Rationale (round-2 VERDICT): a transient machine
-  * stall during a single sequential pass poisons an alphabetically
-  * contiguous block of queries and is indistinguishable from a plan
-  * regression; interleaving makes a stall land on different queries each
-  * pass so the median rejects it — UNLESS the stall spans multiple passes,
-  * which round 3 could not detect mechanically (round-3 VERDICT #1). Hence:
+  * published alongside it. A transient machine stall during a single
+  * sequential pass would poison a contiguous block of queries and look
+  * like a plan regression; interleaving makes a stall land on different
+  * queries each pass so the median rejects it. Stalls that span passes are
+  * caught by:
   *
   *  - INLINE CONTENTION CANARY: a fixed trivial query (1k-row range sum,
   *    no IO, ~10 ms) is timed at the start of every pass AND after every
   *    `CanaryEvery` queries, published as `canary` (one array per pass). A
   *    quiet run keeps every entry flat at milliseconds; a machine stall
-  *    shows as inflated entries AT the position it happened — round 4's
-  *    start-of-pass-only canary stayed flat while stalls hit mid-pass,
-  *    defeating attribution (round-4 VERDICT "What's wrong" #1).
+  *    shows as inflated entries AT the position it happened.
   *  - IN-RUN RE-MEASURE (the mechanical stall/regression separator): the
   *    protocol tracks each query's BEST observed time (warm-up included).
   *    When a measured pass exceeds `StallFactor`× best by more than
@@ -41,89 +37,54 @@ import java.util.concurrent.atomic.AtomicLong
   *      · re-run ALSO slow → genuinely slow (plan regression or sustained
   *        contention); the better of the two samples is recorded and the
   *        query lands in `slow_confirmed`.
-  *    A >2×-baseline entry therefore arrives pre-adjudicated: either its
-  *    `stalled` count explains the pressure (and its median already
-  *    excludes it), or `slow_confirmed` names it a real slowdown.
   *  - PER-PASS TIMES: `pass_times` carries every query's individual pass
   *    wall times (as recorded, post-re-measure), `pass_times_raw` any
   *    replaced originals, and `best` the per-query floor; `n_passes` gives
   *    per-query sample counts so cross-run total diffs can exclude
-  *    short-sampled flaky queries (round-4 ADVICE #5).
-  *  - CANARY-NORMALIZED MEDIANS (round 9): `queries_norm` scales each
-  *    pass's sample by the ratio of the least-contended pass's canary
-  *    median to that pass's, then re-medians — machine co-tenancy divides
-  *    out, plan regressions don't. `slow_confirmed_norm` re-applies the
-  *    stall rule to those medians vs the run's best floor, so "contention
-  *    or regression?" is answerable from the artifact alone.
+  *    short-sampled flaky queries.
+  *  - CANARY-NORMALIZED MEDIANS: `queries_norm` scales each pass's sample
+  *    by the ratio of the least-contended pass's canary median to that
+  *    pass's, then re-medians — machine co-tenancy divides out, plan
+  *    regressions don't. `slow_confirmed_norm` re-applies the stall rule
+  *    to those medians vs the run's best floor.
   *
-  * Failure handling (round-3 ADVICE #1): a failing query is RETRIED once in
-  * the same pass; if the retry also fails the query keeps any
-  * already-recorded pass timings (its median still enters the total, and it
-  * is reported under "flaky") and is skipped in later passes. Only a query
-  * with NO successful pass is excluded from the total and reported under
-  * "failed". SPARK_GRAFT_BENCH_RUNS < 1 is a usage error.
+  * Failure handling: a failing query is RETRIED once in the same pass; if
+  * the retry also fails the query keeps any already-recorded pass timings
+  * (its median still enters the total, and it is reported under "flaky")
+  * and is skipped in later passes. Only a query with NO successful pass is
+  * excluded from the total and reported under "failed".
+  * SPARK_GRAFT_BENCH_RUNS < 1 is a usage error.
   *
-  * Artifact shape (round-7): the FULL JSON (all diagnostics, every query)
-  * is written to SPARK_GRAFT_BENCH_OUT (default bench.json in the CWD);
-  * stdout gets a COMPACT line — headline total, the top-`InlineTopK`
-  * queries by median, capped failure lists, and a pointer to the file.
-  * Rationale: the driver keeps only the last ~2000 chars of stdout, and
-  * rounds 5-6 proved the full 119-query line overflows that window, so
-  * the driver recorded `parsed: null` while the line was in fact printed
-  * (round-6 VERDICT "What's wrong" #2). The compact line is sized to
-  * survive the window with sbt's trailing [success] line included.
+  * Artifact shape: the FULL JSON (all diagnostics, every query) is written
+  * to SPARK_GRAFT_BENCH_OUT (default bench.json in the CWD); stdout gets a
+  * COMPACT line — headline total, the top-`InlineTopK` queries by median,
+  * capped failure lists, and a pointer to the file — sized to survive a
+  * ~2000-char stdout tail window with sbt's trailing [success] line.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // decoupled from core count so scale-stress runs can measure the
-    // partition-sizing knob (spill ∝ per-partition workspace) directly
-    val shufP = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufP)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Round-17 (optimization guide §1.2 step 2 — per-task work): the
-      // whole-stage-codegen class cache is 100 entries by default, far
-      // below this inventory's ~1000 distinct generated classes, so every
-      // interleaved pass recompiled every stage (janino ~10-100 ms per
-      // class — pure fixed overhead, identical bytecode each time). A
-      // 10k-entry cache lets the warm-up pass compile each class once and
-      // every measured pass reuse it. Static conf (must be set at session
-      // build); sized ≪ heap (generated classes are KB-scale). The same
-      // setting helps any long-lived production session or executor JVM —
-      // it is not a local[32] artifact.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // SPARK_GRAFT_TERMINAL_SORT=false measures the DEPLOYMENT shape (the
     // oracle-contract output ordering elided plan-wide) — the delta vs the
     // default run is the oracle tax, not engine cost (see BASELINE.md).
     sys.env.get("SPARK_GRAFT_TERMINAL_SORT")
       .foreach(v => spark.conf.set("graft.terminalSort", v))
-    // SPARK_GRAFT_RAG_SHARED_CHUNKS=true|false selects rag_hybrid's
-    // chunk-scan arm for the A/B (see TextOps.RagSharedChunkScanConf)
-    sys.env.get("SPARK_GRAFT_RAG_SHARED_CHUNKS")
-      .foreach(v => spark.conf.set(graft.operators.TextOps.RagSharedChunkScanConf, v))
     // Warm the session/IO paths before even the warm-up pass so its first
     // query isn't charged session-initialization cost. BEST-EFFORT: a warm
-    // failure (e.g. a testdata schema change breaking one loader, as in the
-    // round-5 driver run) must degrade to a cold first query, never zero the
-    // whole artifact — per-query failures are adjudicated inside the loop.
-    // NonFatal only (round-6 ADVICE #1): an OutOfMemoryError or
-    // LinkageError here would make every later query fail confusingly —
-    // let fatal errors abort the process with their real stack.
+    // failure (e.g. a testdata schema change breaking one loader) must
+    // degrade to a cold first query, never zero the whole artifact —
+    // per-query failures are adjudicated inside the loop. NonFatal only:
+    // an OutOfMemoryError or LinkageError here would make every later
+    // query fail confusingly, so fatal errors abort with their real stack.
     for (warm <- Seq(() => Tables.lineitem(spark, sfDir).count(),
                      () => Tables.events(spark, sfDir).count()))
       try warm() catch {
         case scala.util.control.NonFatal(e) =>
           System.err.println(s"[bench] warm-up read failed (continuing cold): ${e.getMessage}")
       }
-    // SHUFFLE-VOLUME TELEMETRY (round-7 VERDICT next-round #5): wall time on
-    // local[32] hides exchange mass — the in-memory shuffle runs at RAM
+    // SHUFFLE-VOLUME TELEMETRY: wall time on a local session hides
+    // exchange mass — the in-memory shuffle runs at RAM
     // speed, but on a 1000-executor cluster every shuffled byte crosses the
     // network and is what the bill scales with. A task-end listener
     // accumulates shuffle read/write and spill bytes; per-query DELTAS are
@@ -200,9 +161,8 @@ object Bench {
         def runOnce(): Double =
           timed(SparkEntry.queries(name)(spark, sfDir).queryExecution.toRdd.count())
         // shuffle deltas captured on the warm-up pass only (see header);
-        // a pass-0 retry RE-SNAPSHOTS the base first (round-8 ADVICE #4:
-        // without the reset, the failed attempt's bytes doubled the
-        // published delta and a consumer couldn't tell it from a real one)
+        // a pass-0 retry RE-SNAPSHOTS the base first so the failed
+        // attempt's bytes never double the published delta
         var shufBase = if (pass == 0) Some(shuffleSnapshot()) else None
         try {
           val sec = try runOnce() catch {
@@ -290,15 +250,14 @@ object Bench {
     def arr(xs: Seq[String]) = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
     val rt = obj(names.filter(retries.contains).map(n => n -> retries(n).toString))
     val total = meds.map(_._2).sum
-    // CANARY-NORMALIZED MEDIANS (round-8 VERDICT "What's wrong" #3): the
-    // canary is fixed no-IO work, so a pass's canary median measures the
+    // CANARY-NORMALIZED MEDIANS: the canary is fixed no-IO work, so a pass's canary median measures the
     // MACHINE during that pass, not the inventory. Scaling each pass's
     // sample by (least-contended pass's canary / its pass's canary)
     // removes co-tenancy inflation a plan regression cannot hide behind —
     // `slow_confirmed_norm` re-applies the stall rule to the normalized
     // medians against the run's own best-of-passes floor, making the
     // "contention or regression?" adjudication mechanical from the
-    // artifact alone (round 8's four contention flags normalize away).
+    // artifact alone.
     // Alignment: a query's times vector is a PREFIX of the measured
     // passes (a twice-failed query is retired immediately), so sample i
     // belongs to pass i+1.
@@ -311,7 +270,7 @@ object Bench {
     val medsNorm = measured.map(n => n -> median(normed(n)))
     val totalNorm = medsNorm.map(_._2).sum
     val qsNorm = obj(medsNorm.map { case (k, v) => k -> fmt(v) })
-    // round-9 ADVICE: the floor must come from the NORMALIZED samples too —
+    // the floor comes from the NORMALIZED samples too —
     // the raw best can itself be a contended measurement, and normalization
     // only scales samples down, so a raw floor makes the rule strictly laxer.
     val slowNorm = medsNorm.collect {

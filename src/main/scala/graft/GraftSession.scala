@@ -3,8 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** Library entry point: a `SparkSession.Builder` pre-configured the way the
-  * engine expects, for users embedding graft in their own application
-  * (the driver-contract mains Verify/Bench configure themselves).
+  * engine expects, for users embedding graft in their own application.
   *
   *  - `graft.plans.GraftExtensions` injected → every native kernel
   *    (`vec_dot`, `vec_sq_dist`, `hashed_word_grams`, `hashed_char_grams`,
@@ -19,7 +18,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Deliberately NOT set here: master, shuffle partitions, memory — cluster
   * sizing belongs to the deployment, not the library. Callers chain their
-  * own `.master(...)`/`.config(...)` on the returned builder.
+  * own `.master(...)`/`.config(...)` on the returned builder; the mains and
+  * the test suites use [[local]].
   */
 object GraftSession {
   def builder(): SparkSession.Builder =
@@ -27,8 +27,28 @@ object GraftSession {
       .withExtensions(new graft.plans.GraftExtensions)
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.session.timeZone", "UTC")
-      // codegen class cache sized for a many-operator inventory (the
-      // 100-entry default thrashes once a session runs more than a few
-      // dozen distinct plans; see graft.Bench for the measurement)
+      // codegen class cache sized for a many-operator inventory: the
+      // 100-entry default is far below the inventory's ~1000 generated
+      // classes, so a long-lived session recompiles every stage it reuses
       .config("spark.sql.codegen.cache.maxEntries", "10000")
+
+  /** Task slots of a [[local]] session: `SPARK_GRAFT_CPUS`, else the
+    * machine's core count.
+    */
+  private lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors)
+
+  /** The local session every main and test suite runs on: [[builder]]
+    * with one task slot and one shuffle partition per core, the UI off and
+    * WARN logging.
+    */
+  def local(cores: Int = cpus): SparkSession = {
+    val s = builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
 }

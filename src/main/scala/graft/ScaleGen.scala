@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Synthetic scale-up generator for the round-7 scale-stress measurement
+/** Synthetic scale-up generator for the scale-stress measurements
   * (BASELINE.md "10× scale-stress"): replicates the sf0.1 tables `factor`×
   * into an output dir, with KEY-DISJOINT replicas so join/group cardinality
   * scales linearly like real growth would — naive row duplication would
@@ -42,15 +42,7 @@ object ScaleGen {
     val Array(src, out, fStr) = args
     val factor = fStr.toInt
     require(factor >= 1, s"factor must be >= 1, got $factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     generate(spark, src, out, factor)
     spark.stop()
   }
@@ -90,7 +82,7 @@ object ScaleGen {
     // per-replica answers — output scales LINEARLY in the factor, the
     // "10x more entities" semantics. (Verbatim replication would plant
     // factor-sized exact-duplicate name groups and a quadratic output — a
-    // fixture property, which round-7's first scale table had to exclude.)
+    // fixture property, not an engine one.)
     write(replicated(Tables.customer(spark, src), factor)
       .select(off("c_custkey") +: concat(col("c_name"), lit("_"), col("rep"),
           lit("_"), col("rep")).as("c_name") +:

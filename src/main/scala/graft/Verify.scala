@@ -1,10 +1,10 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
-  * SPARK_GRAFT_ONLY=q1,q2 restricts the dump (single-query iteration aid);
-  * the driver sets no filter and gets everything.
+/** Correctness dump on a [[GraftSession.local]] session: each
+  * SparkEntry.queries result → parquet, plus oracle_sql.json, for the
+  * DuckDB compare (tools/selfcheck.py). SPARK_GRAFT_ONLY=q1,q2 restricts
+  * the dump (single-query iteration aid); without it every query is dumped.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
@@ -13,27 +13,13 @@ object Verify {
       sys.exit(2)
     }
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // see Bench: the 100-entry default recompiles every generated class
-      // on every reuse once the inventory exceeds the cache
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local()
     // SPARK_GRAFT_TERMINAL_SORT=false dumps the DEPLOYMENT shape (terminal
     // oracle sorts elided plan-wide) for the order-INSENSITIVE gate
-    // (tools/selfcheck.py --unordered): proves the ~26%-faster production
-    // plan computes the same row MULTISET, not just that the sorted shape
-    // does (round-7 VERDICT next-round #1).
+    // (tools/selfcheck.py --unordered): the production plan must compute
+    // the same row MULTISET, not just the sorted shape.
     sys.env.get("SPARK_GRAFT_TERMINAL_SORT")
       .foreach(v => spark.conf.set("graft.terminalSort", v))
-    sys.env.get("SPARK_GRAFT_RAG_SHARED_CHUNKS")
-      .foreach(v => spark.conf.set(graft.operators.TextOps.RagSharedChunkScanConf, v))
     // SPARK_GRAFT_RESIZE_MOD=N gates multimodal_resize on the doc_id % N = 0
     // subset (100× oracle tractability — SparkEntry.resizeGateWhere reads
     // the SAME env for the dumped SQL, so both sides cover one subset)

@@ -1041,24 +1041,21 @@ object Relational {
   /** Columns profiled by `stats_profile`. */
   val ProfileCols: Seq[String] = Seq("l_quantity", "l_extendedprice", "l_discount", "l_tax")
 
-  /** Round-17 (guide §2.5 "unsplittable file"): fan a SINGLE-SPLIT scan out
-    * before compute-heavy map-side work. The sf fixtures ship each table as
-    * one parquet row group, so every scan is one task and everything below
-    * the first exchange runs serial — for stats_moments that serializes the
-    * exact-decimal quartic arithmetic over the whole
-    * table. The repartition is applied ONLY when the table's total bytes fit
-    * inside one scan split (`spark.sql.files.maxPartitionBytes`): at
-    * production scale the condition is false and the plan is byte-for-byte
-    * unchanged — the knob derives from input size, it is not a local[32]
-    * constant. Results are partition-independent (the host queries are
-    * global aggregates with exact-sum discipline).
+  /** Fan a SINGLE-SPLIT scan out before compute-heavy map-side work. The
+    * sf fixtures ship each table as one parquet row group, so every scan is
+    * one task and everything below the first exchange runs serial — for
+    * stats_moments that serializes the exact-decimal quartic arithmetic
+    * over the whole table. The repartition is applied ONLY when
+    * `dir/table.parquet`'s total bytes fit inside one scan split
+    * (`spark.sql.files.maxPartitionBytes`): at production scale the
+    * condition is false and the plan is byte-for-byte unchanged — the knob
+    * derives from input size, it is not a core-count constant. Results are
+    * partition-independent (the host queries are global aggregates with
+    * exact-sum discipline).
     */
-  /** True when `dir/table.parquet` fits inside ONE scan split (the
-    * [[fanOutIfSingleSplit]] condition, exposed for other scale gates —
-    * round 18 uses it to pick `agg_quantile_merge`'s exact-prefix form).
-    */
-  private[graft] def fitsOneSplit(s: SparkSession, dir: String,
-                                  table: String): Boolean = {
+  private[graft] def fanOutIfSingleSplit(s: SparkSession, df: DataFrame,
+                                         dir: String, table: String,
+                                         keys: Column*): DataFrame = {
     val bytes = try {
       val path = new org.apache.hadoop.fs.Path(s"$dir/$table.parquet")
       val fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
@@ -1066,13 +1063,7 @@ object Relational {
     } catch { case scala.util.control.NonFatal(_) => Long.MaxValue }
     val maxSplit = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
       s.conf.get("spark.sql.files.maxPartitionBytes", "128MB"))
-    bytes < maxSplit
-  }
-
-  private[graft] def fanOutIfSingleSplit(s: SparkSession, df: DataFrame,
-                                         dir: String, table: String,
-                                         keys: Column*): DataFrame = {
-    if (!fitsOneSplit(s, dir, table)) df
+    if (bytes >= maxSplit) df
     // hash keys when given (skips round-robin's sort-before-repartition —
     // SPARK-23207 makes every keyless repartition pre-sort its input so
     // retries are deterministic; a deterministic key needs no such sort),

@@ -299,14 +299,6 @@ object TextOps {
     */
   val RagMaxQueryDoc = 5000L
 
-  /** `rag_hybrid` chunk-scan mode: `true` materializes the shared chunk
-    * frame once (lineage cut) for both retriever arms; `false` lets each
-    * arm derive it from the documents scan independently (Catalyst still
-    * reuses the file scan; the chunking compute runs twice). See the A/B
-    * note in [[ragHybrid]].
-    */
-  val RagSharedChunkScanConf = "graft.rag.sharedChunkScan"
-
   /** Hashed-BoW embedding of a text column: md5-prefix hash per token
     * (house portable-hash idiom), then per-dimension counts — emitted as
     * `array<float>` so the scoring stage can run the codegen'd
@@ -333,11 +325,7 @@ object TextOps {
     * k = `RagTopK`; `rag_hybrid` fuses it at k = `HybridN` (one body, so
     * the registered query and the fusion input cannot drift).
     */
-  private[graft] def ragDenseRanked(s: SparkSession, dir: String, k: Int): DataFrame =
-    ragDenseRankedFrom(chunkFrame(s, dir), s, dir, k)
-
-  private[graft] def ragDenseRankedFrom(
-      chunks0: DataFrame, s: SparkSession, dir: String, k: Int): DataFrame = {
+  private[graft] def ragDenseRanked(s: SparkSession, dir: String, k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // The repartition is a deliberate pipeline barrier, not a distribution
     // need: whole-stage codegen DEFERS a deterministic projection into the
@@ -346,8 +334,8 @@ object TextOps {
     // materializes the embedding exactly once per chunk (the "build the
     // embedding table" stage every vector pipeline has anyway); it ships
     // ids + 16 floats, far smaller than the chunk text it replaces.
-    // Round-17 (guide §2.2): the barrier keeps an EXPLICIT partition count
-    // (scale-adaptive: defaultParallelism), because a bare repartition(col)
+    // The barrier keeps an EXPLICIT partition count (scale-adaptive:
+    // defaultParallelism), because a bare repartition(col)
     // is AQE-coalescible and the embedding table is small enough that AQE
     // folded it to one partition — serializing the |queries| × |chunks|
     // scoring stage and the top-k window above it. A fan-out of the chunk
@@ -356,7 +344,7 @@ object TextOps {
     // chunk explode is ~10× that, so the extra exchange ships ~600 MB of
     // chunk text); the barrier alone is also the fastest form at sf0.1
     // (1.15 → 0.55 s warm vs 0.82 s with the fan-out).
-    val chunks = chunks0
+    val chunks = chunkFrame(s, dir)
       .select(col("doc_id"), col("chunk_id"),
         graft.plans.HashedBow.of(col("chunk"), RagDims).as("vec"))
       .repartition(s.sparkContext.defaultParallelism, col("doc_id"), col("chunk_id"))
@@ -445,29 +433,25 @@ object TextOps {
     * fuses it at k = `HybridN`. The ranking key stays the exact decimal
     * sum throughout.
     */
-  private[graft] def ragSparseRanked(s: SparkSession, dir: String, k: Int): DataFrame =
-    ragSparseRankedFrom(chunkFrame(s, dir), s, dir, k)
-
-  private[graft] def ragSparseRankedFrom(
-      chunks0: DataFrame, s: SparkSession, dir: String, k: Int): DataFrame = {
+  private[graft] def ragSparseRanked(s: SparkSession, dir: String, k: Int): DataFrame = {
     import graft.functions.ScalarAttach._
     import org.apache.spark.sql.types.DecimalType
     // array_remove(split(...), "") ≡ filter(split(...), t => t =!= "") —
     // same array for any input — but ArrayRemove is a codegen expression
     // while the filter HOF is CodegenFallback (interpreted per row, a
-    // closure per element) — round-17, guide §1.2 step 2
+    // closure per element)
     val realToks = (c: Column) => array_remove(split(c, " "), "")
     // chunk token stream; dl (chunk token count) is a PER-ROW function of
     // the chunk text, computed before the explode — no window, no rejoin.
-    // Round-17 (guide §1.2 step 2): the token array is materialized as its
-    // own projection BELOW the Generate — `size(realToks(c))` and
+    // The token array is materialized as its own projection BELOW the
+    // Generate — `size(realToks(c))` and
     // `explode(realToks(c))` in one select evaluated the interpreted
     // split+filter HOF TWICE per chunk row (the generator input is
     // evaluated in the Generate node, outside the child project's
     // common-subexpression elimination); via an attribute it runs once.
-    // round-17 single-split fan-out (guide §2.5): tokenization + the tf
-    // partial aggregation otherwise run inside the one-row-group scan task
-    val tok = Relational.fanOutIfSingleSplit(s, chunks0, dir, "documents",
+    // single-split fan-out: tokenization + the tf partial aggregation
+    // otherwise run inside the one-row-group scan task
+    val tok = Relational.fanOutIfSingleSplit(s, chunkFrame(s, dir), dir, "documents",
         col("doc_id"), col("chunk_id"))
       .select(col("doc_id"), col("chunk_id"), realToks(col("chunk")).as("toks"))
       .select(col("doc_id"), col("chunk_id"),
@@ -504,8 +488,8 @@ object TextOps {
     // Per-POSTING contribution, computed ONCE: idf·norm is a function of
     // (term, tf, dl) only — independent of the query — so the ln and the
     // decimal cast run |postings| times, not |postings × matching queries|
-    // times (round-10 computed them after the query join: 15M evaluations
-    // vs 300k at sf0.1, the actual 6-second culprit). The repartition on
+    // times (after the query join it was 15M evaluations vs 300k at
+    // sf0.1, a 6-second cost). The repartition on
     // (doc_id, chunk_id) makes HashPartitioning(d,c) satisfy the score
     // agg's ClusteredDistribution(q,d,c) (subset rule), so the query
     // fan-out — postings × matching queries — is generated AND hash-
@@ -535,7 +519,7 @@ object TextOps {
   val RrfK = 60
   val RrfL = 142813628717760L
 
-  /** K32 `rag_hybrid` (round 10): hybrid retrieval — reciprocal-rank
+  /** K32 `rag_hybrid`: hybrid retrieval — reciprocal-rank
     * fusion (RRF, Cormack 2009) of the dense (`rag_retrieve`) and sparse
     * (`rag_bm25`) lists, the default production RAG retrieval shape
     * (lexical recall + semantic recall, fused rank-side so the two
@@ -552,7 +536,7 @@ object TextOps {
     * window are query-bounded, not corpus-bounded. At 100 TB the corpus
     * pays one scan per retriever (exactly what running the two registered
     * queries would pay); fusion adds zero corpus-sized work. Measured
-    * (round 11, flag-free sf0.1): rag_hybrid 3.68 s vs rag_retrieve
+    * (flag-free sf0.1): rag_hybrid 3.68 s vs rag_retrieve
     * 0.93 s + rag_bm25 3.33 s = 4.26 s standalone — the fusion costs
     * LESS than the sum of the registered queries (the arms share the
     * session's warmed chunk scan), i.e. ≈ the sum and nothing more.
@@ -560,28 +544,15 @@ object TextOps {
   def ragHybrid(s: SparkSession, dir: String): DataFrame = {
     val rrf = (rank: String) =>
       coalesce(expr(s"CAST($RrfL AS BIGINT) div ($RrfK + $rank)"), lit(0L))
-    // A/B (round-13, carried VERDICT item): `graft.rag.sharedChunkScan`
-    // materializes chunkFrame ONCE behind a lineage cut feeding both the
-    // dense embedding and the sparse tf index, instead of each arm
-    // re-deriving it from the documents scan. Measured at 100× (isolated
-    // 5-pass runs, BASELINE.md): shared 28.9 s vs independent 27.7 s
-    // median — a wash (clean-pass ranges overlap entirely; the chunking
-    // compute is noise next to each arm's own join/agg work, and Catalyst
-    // reuses the underlying file scan anyway). Default stays INDEPENDENT:
-    // same speed, no materialization footprint, simpler plan.
-    import graft.functions.LineageCut._
-    val shared = s.conf.get(RagSharedChunkScanConf, "false").toBoolean
-    val (d0, sp0) =
-      if (shared) {
-        val ch = chunkFrame(s, dir).lineageCut(eager = false)
-        (ragDenseRankedFrom(ch, s, dir, HybridN),
-         ragSparseRankedFrom(ch, s, dir, HybridN))
-      } else
-        (ragDenseRanked(s, dir, HybridN), ragSparseRanked(s, dir, HybridN))
-    val d = d0
+    // Each arm derives the chunk frame from the documents scan on its own.
+    // Materializing it once behind a lineage cut for both arms measured a
+    // wash at 100× (28.9 s shared vs 27.7 s independent, BASELINE.md):
+    // Catalyst reuses the file scan and the chunking is noise next to each
+    // arm's join/agg work, so the simpler plan stays.
+    val d = ragDenseRanked(s, dir, HybridN)
       .select(col("query_doc"), col("doc_id"), col("chunk_id"),
         col("rnk").as("dense_rnk"))
-    val sp = sp0
+    val sp = ragSparseRanked(s, dir, HybridN)
       .select(col("query_doc"), col("doc_id"), col("chunk_id"),
         col("rnk").as("sparse_rnk"))
     val w = Window.partitionBy("query_doc")
@@ -2324,18 +2295,19 @@ object TextOps {
 
   /** K2b′ `dedup_simhash_pairs`: near-dup DOCUMENT PAIRS within Hamming ≤ k
     * of the 16-bit SimHash — the step `dedup_simhash`'s exact-signature
-    * buckets stop short of (round-2 VERDICT #3). Classic band-rotation join:
-    * candidates from any-band equality (exact recall in the radius, see
-    * SimhashBands), verification by exact Hamming distance.
+    * buckets stop short of. [[simhashRadiusPairs]] enumerates the radius
+    * directly: each distinct signature explodes into its XOR masks of
+    * weight 1..k, and each neighbor value is equi-joined back to the
+    * signature table, so every unordered pair within the radius is found
+    * exactly once and no band join or Hamming verification is needed.
     *
     * Scale shape: the pairing runs over DISTINCT signatures, not documents —
     * a 16-bit space holds ≤ 65 536 rows no matter the corpus size, so the
-    * band self-join cost is a CONSTANT, independent of N (each signature
-    * carries its min doc_id as the cluster representative; full membership
-    * is `dedup_simhash`'s bucket table, an equi-join away). At 100 TB one
-    * would widen to a 64-bit signature with 16-bit bands — identical shape,
-    * and the distinct-signature reduction is what keeps the join from ever
-    * seeing corpus-scale row counts either way.
+    * probe count and the broadcast build side are bounded by the signature
+    * space, independent of N (each signature carries its min doc_id as the
+    * cluster representative; full membership is `dedup_simhash`'s bucket
+    * table, an equi-join away). Wider signatures use the band form
+    * (`dedup_simhash_wide`), whose mask count would otherwise explode.
     */
   def dedupSimhashPairs(s: SparkSession, dir: String): DataFrame =
     simhashRadiusPairs(

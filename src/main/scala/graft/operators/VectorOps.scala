@@ -1221,7 +1221,7 @@ object VectorOps {
     * embedding — parquet stores each column as separate chunks, so stage 1
     * reads the 16-float family and never touches the 64-float one (the
     * scan-schema assertion in SourcesSpec; measured bytes cut in
-    * BASELINE.md via [[graft.MrlBytes]]).
+    * BASELINE.md and `mrl_bytes_r14.json`).
     */
   val MrlStageDir = "/tmp/graft_mrl_prefix"
 
@@ -1306,12 +1306,9 @@ object VectorOps {
   }
 
   /** Stage-2 candidate frame of `sim_mrl` (the top-C-by-prefix-cosine
-    * (q_id, vec_id) pairs) — split out so the query, the AnnRecall cost
-    * axis, and the [[graft.MrlBytes]] scan-bytes A/B share one body. The
-    * input frame must carry a `prefix` column: the staged mirror for the
-    * operator (column-family read), or an inline
-    * `slice(embedding, 1, MrlPrefixDims)` projection for the legacy arm
-    * of the bytes A/B ([[mrlPrefixInline]]).
+    * (q_id, vec_id) pairs) — split out so the query and the AnnRecall cost
+    * axis share one body. The input frame must carry a `prefix` column
+    * (the staged mirror's column family).
     */
   private[graft] def mrlCandidates(s: SparkSession, emb: DataFrame): DataFrame = {
     val c = mrlCandidateCount(s)
@@ -1327,17 +1324,6 @@ object VectorOps {
       .filter(col("prn") <= c)
       .select("q_id", "vec_id")
   }
-
-  /** The round-13 stage-1 input shape, kept as the A/B arm of the
-    * scan-bytes measurement: prefix computed inline by slicing the full
-    * embedding column (the scan must read all `Dim` floats), materialized
-    * behind a repartition barrier so codegen cannot defer the slice into
-    * the BNLJ build loop (the `ragDenseRanked` discipline).
-    */
-  private[graft] def mrlPrefixInline(s: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(s, dir)
-      .select(col("vec_id"), slice(col("embedding"), 1, MrlPrefixDims).as("prefix"))
-      .repartition(col("vec_id"))
 
   // ------------------------------------------------------------------
   // K3j sim_hamming: binary quantization + Hamming stage 1 + exact rerank
@@ -1363,7 +1349,7 @@ object VectorOps {
     * the two signature words as their OWN parquet columns next to the
     * full embedding, so stage 1's scan schema is `(vec_id, bits_lo,
     * bits_hi)` — 2 longs instead of `Dim` floats, a ~16× column-family
-    * byte cut (measured by [[graft.HamBytes]]; asserted in SourcesSpec).
+    * byte cut (measured: `ham_bytes_r14.json`; asserted in SourcesSpec).
     */
   val HamStageDir = "/tmp/graft_ham_bits"
 
@@ -1395,24 +1381,10 @@ object VectorOps {
     s.read.parquet(s"${Relational.stagedRoot(HamStageDir)}/embeddings")
   }
 
-  /** Inline A/B arm of the [[graft.HamBytes]] scan-bytes measurement: the
-    * signature computed on the fly from the full embedding column (the
-    * scan must fetch all `Dim` floats), behind the same repartition
-    * barrier as [[mrlPrefixInline]] so codegen cannot defer the signature
-    * build into the BNLJ build loop.
-    */
-  private[graft] def hamBitsInline(s: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(s, dir)
-      .select(col("vec_id"),
-        Vec.signBucket(col("embedding"), HamWordBits).as("bits_lo"),
-        Vec.signBucket(col("embedding"), HamWordBits, HamWordBits).as("bits_hi"))
-      .repartition(col("vec_id"))
-
   /** Stage-1 candidate frame of `sim_hamming`: top-C per query by Hamming
     * distance between sign signatures — two XOR+popcount longs per
     * (corpus row, query), integer-exact on both engines. The input frame
-    * must carry `bits_lo`/`bits_hi`: the staged mirror for the operator,
-    * or the inline projection for the bytes A/B.
+    * must carry `bits_lo`/`bits_hi` (the staged mirror's column family).
     */
   private[graft] def hamCandidates(s: SparkSession, emb: DataFrame): DataFrame = {
     val c = hamCandidateCount(s)

@@ -10,23 +10,16 @@ import org.scalatest.funsuite.AnyFunSuite
 class GraftSessionSpec extends AnyFunSuite {
   import SparkTestSession.sfDir
 
+  // the shared test session is built by GraftSession.local on builder()
   test("GraftSession.builder() reads events and exposes vec_dot/vec_sq_dist in SQL") {
-    val base = SparkTestSession.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s = GraftSession.builder().getOrCreate()
-      assert(Tables.events(s, sfDir).limit(5).count() == 5)
-      import s.implicits._
-      Seq((Seq(1.0f, 2.0f), Seq(3.0f, 4.0f))).toDF("a", "b")
-        .createOrReplaceTempView("graft_session_v")
-      val r = s.sql(
-        "SELECT vec_dot(a, b) AS d, vec_sq_dist(a, b) AS sq FROM graft_session_v").collect()
-      assert(r(0).getDouble(0) == 11.0 && r(0).getDouble(1) == 8.0)
-    } finally {
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
-    }
+    val s = SparkTestSession.spark
+    assert(Tables.events(s, sfDir).limit(5).count() == 5)
+    import s.implicits._
+    Seq((Seq(1.0f, 2.0f), Seq(3.0f, 4.0f))).toDF("a", "b")
+      .createOrReplaceTempView("graft_session_v")
+    val r = s.sql(
+      "SELECT vec_dot(a, b) AS d, vec_sq_dist(a, b) AS sq FROM graft_session_v").collect()
+    assert(r(0).getDouble(0) == 11.0 && r(0).getDouble(1) == 8.0)
   }
 
   test("Tables.events adapts to the observed ts encoding without mutating session conf") {

@@ -34,27 +34,14 @@ class NativeVecSpec extends AnyFunSuite {
     }
   }
 
+  // the shared test session is a GraftSession, so GraftExtensions' SQL
+  // registrations are visible on it directly
   test("GraftExtensions registers vec_dot on the SQL path") {
-    import org.apache.spark.sql.SparkSession
-    val base = spark
-    // Extensions apply at session construction. `spark.sql.extensions` is a
-    // STATIC conf read from the SparkContext (ignored on a sibling-session
-    // builder), so inject the class directly — same code path as the conf.
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .withExtensions(new graft.plans.GraftExtensions)
-        .getOrCreate()
-      import s2.implicits._
-      Seq((Seq(1.0f, 2.0f), Seq(3.0f, 4.0f))).toDF("a", "b")
-        .createOrReplaceTempView("graft_vec_dot_v")
-      val r = s2.sql("SELECT vec_dot(a, b) AS d FROM graft_vec_dot_v").collect()
-      assert(r.length == 1 && r(0).getDouble(0) == 11.0)
-    } finally {
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
-    }
+    import spark.implicits._
+    Seq((Seq(1.0f, 2.0f), Seq(3.0f, 4.0f))).toDF("a", "b")
+      .createOrReplaceTempView("graft_vec_dot_v")
+    val r = spark.sql("SELECT vec_dot(a, b) AS d FROM graft_vec_dot_v").collect()
+    assert(r.length == 1 && r(0).getDouble(0) == 11.0)
   }
 
   test("native sqDist == HOF sqDist bitwise, for float-float and float-double mixes") {
@@ -74,23 +61,11 @@ class NativeVecSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions registers vec_sq_dist on the SQL path") {
-    import org.apache.spark.sql.SparkSession
-    val base = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .withExtensions(new graft.plans.GraftExtensions)
-        .getOrCreate()
-      import s2.implicits._
-      Seq((Seq(1.0f, 2.0f), Seq(3.0f, 4.0f))).toDF("a", "b")
-        .createOrReplaceTempView("graft_vec_sqdist_v")
-      val r = s2.sql("SELECT vec_sq_dist(a, b) AS d FROM graft_vec_sqdist_v").collect()
-      assert(r.length == 1 && r(0).getDouble(0) == 8.0)
-    } finally {
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
-    }
+    import spark.implicits._
+    Seq((Seq(1.0f, 2.0f), Seq(3.0f, 4.0f))).toDF("a", "b")
+      .createOrReplaceTempView("graft_vec_sqdist_v")
+    val r = spark.sql("SELECT vec_sq_dist(a, b) AS d FROM graft_vec_sqdist_v").collect()
+    assert(r.length == 1 && r(0).getDouble(0) == 8.0)
   }
 
   test("HashedGrams == HOF hashed-gram chain bitwise, word and char modes") {
@@ -292,44 +267,32 @@ class NativeVecSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions registers the text kernels on the SQL path") {
-    import org.apache.spark.sql.SparkSession
-    val base = spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    try {
-      val s2 = SparkSession.builder()
-        .withExtensions(new graft.plans.GraftExtensions)
-        .getOrCreate()
-      import s2.implicits._
-      Seq(("a b c d a b", 0L)).toDF("text", "junk")
-        .createOrReplaceTempView("graft_textk_v")
-      val r = s2.sql(
-        """SELECT size(hashed_word_grams(text, 3)) AS nw,
-          |       size(hashed_char_grams(text, 4)) AS nc,
-          |       hashed_char_grams_wide(text, 4) AS wide,
-          |       hashed_char_grams(text, 4) AS narrow,
-          |       min_gram_md5(text, 3) AS mg,
-          |       top_gram_count(text, 2) AS tg,
-          |       simhash16(text) AS s16,
-          |       simhash60(text) AS s60,
-          |       size(band_sigs(hashed_word_grams(text, 3), 4)) AS nb
-          |FROM graft_textk_v""".stripMargin).collect().head
-      // the wide registration must NOT mod-p-reduce: same grams, and each
-      // narrow value is its wide counterpart mod the Mersenne prime
-      val wide = r.getSeq[Long](r.fieldIndex("wide"))
-      val narrow = r.getSeq[Long](r.fieldIndex("narrow"))
-      assert(wide.map(_ % graft.operators.TextOps.MinhashP) == narrow)
-      assert(wide.exists(_ >= graft.operators.TextOps.MinhashP),
-        s"wide values all below 2^31 — modP wiring suspect: $wide")
-      assert(r.getAs[Int]("nw") == 4)   // "a b c","b c d","c d a","d a b"
-      assert(r.getAs[Long]("tg") == 2L) // "a b" appears twice
-      assert(r.getAs[String]("mg").length == 32)
-      assert(r.getAs[Int]("nb") == 4)
-      assert(r.getAs[Long]("s16") >= 0L && r.getAs[Long]("s60") >= 0L)
-    } finally {
-      SparkSession.setDefaultSession(base)
-      SparkSession.setActiveSession(base)
-    }
+    import spark.implicits._
+    Seq(("a b c d a b", 0L)).toDF("text", "junk")
+      .createOrReplaceTempView("graft_textk_v")
+    val r = spark.sql(
+      """SELECT size(hashed_word_grams(text, 3)) AS nw,
+        |       size(hashed_char_grams(text, 4)) AS nc,
+        |       hashed_char_grams_wide(text, 4) AS wide,
+        |       hashed_char_grams(text, 4) AS narrow,
+        |       min_gram_md5(text, 3) AS mg,
+        |       top_gram_count(text, 2) AS tg,
+        |       simhash16(text) AS s16,
+        |       simhash60(text) AS s60,
+        |       size(band_sigs(hashed_word_grams(text, 3), 4)) AS nb
+        |FROM graft_textk_v""".stripMargin).collect().head
+    // the wide registration must NOT mod-p-reduce: same grams, and each
+    // narrow value is its wide counterpart mod the Mersenne prime
+    val wide = r.getSeq[Long](r.fieldIndex("wide"))
+    val narrow = r.getSeq[Long](r.fieldIndex("narrow"))
+    assert(wide.map(_ % graft.operators.TextOps.MinhashP) == narrow)
+    assert(wide.exists(_ >= graft.operators.TextOps.MinhashP),
+      s"wide values all below 2^31 — modP wiring suspect: $wide")
+    assert(r.getAs[Int]("nw") == 4)   // "a b c","b c d","c d a","d a b"
+    assert(r.getAs[Long]("tg") == 2L) // "a b" appears twice
+    assert(r.getAs[String]("mg").length == 32)
+    assert(r.getAs[Int]("nb") == 4)
+    assert(r.getAs[Long]("s16") >= 0L && r.getAs[Long]("s60") >= 0L)
   }
 
   test("FloatVecDot appears codegen'd in the physical plan") {

@@ -4,23 +4,12 @@ import org.apache.spark.sql.SparkSession
 
 /** Shared local session for all suites (mirrors the reference suites'
   * single-SparkContext style [ref: wikipedia/…/WikipediaSuite.scala]).
-  * Config matches Verify/Bench so plan assertions see the same physical
-  * plans the driver harness produces.
+  * It is the same [[GraftSession.local]] session Verify/Bench run on, so
+  * plan assertions see the plans those mains produce; 4 cores keep the
+  * suites' partition-dependent expectations fixed on any machine.
   */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.warehouse.dir", "/tmp/graft_test_warehouse")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession.local(4)
 
   /** Smallest driver-generated scale factor — fast enough for unit tests. */
   val sfDir = "/root/testdata/sf0.001"

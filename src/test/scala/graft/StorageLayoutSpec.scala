@@ -27,9 +27,10 @@ class StorageLayoutSpec extends AnyFunSuite {
       // directories persist; clear both so re-runs are idempotent.
       spark.sql("DROP TABLE IF EXISTS graft_orders_bkt")
       spark.sql("DROP TABLE IF EXISTS graft_lineitem_bkt")
-      import scala.reflect.io.Directory
-      new Directory(new java.io.File("/tmp/graft_test_warehouse/graft_orders_bkt")).deleteRecursively()
-      new Directory(new java.io.File("/tmp/graft_test_warehouse/graft_lineitem_bkt")).deleteRecursively()
+      val warehouse = new org.apache.hadoop.fs.Path(spark.conf.get("spark.sql.warehouse.dir"))
+      val fs = warehouse.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      Seq("graft_orders_bkt", "graft_lineitem_bkt")
+        .foreach(t => fs.delete(new org.apache.hadoop.fs.Path(warehouse, t), true))
       Tables.orders(spark, sfDir)
         .write.bucketBy(8, "o_orderkey").sortBy("o_orderkey")
         .mode("overwrite").saveAsTable("graft_orders_bkt")

@@ -1,9 +1,8 @@
 #!/usr/bin/env python3
 """Stamp derived doc counts into README.md / MIGRATION.md.
 
-Four consecutive rounds of VERDICT flagged count drift in the docs (test
-totals and the BNLJ allowlist size typed by hand and left behind by the
-suite). This script makes the numbers DERIVED, never typed:
+Test totals and the BNLJ allowlist size typed by hand drift away from the
+suite. This script makes the numbers DERIVED, never typed:
 
   - test count          <- "Total number of tests run: N" in an `sbt test`
                            log (pass the log path; the verify workflow tees
@@ -12,7 +11,7 @@ suite). This script makes the numbers DERIVED, never typed:
                            `graft.Verify` dump
   - oracled queries     <- oracle_sql.json keys in the same dump
   - BNLJ allowlist      <- the `bnljAllowed` map literal in
-                           PlanSweepSpec.scala
+                           InventoryLawSpec.scala
 
 Usage:
   python3 tools/stamp_counts.py --sbt-log /tmp/test.log --verify-dir /tmp/v13
@@ -59,10 +58,9 @@ def parse_test_detail(log_path):
 
 
 def stamp_progress(n_tests, detail, n_queries, n_oracles, check):
-    """Append the round's exact test/suite figures to PROGRESS.jsonl
-    (round-16 VERDICT #8) so the judge can diff them instead of re-running
-    the 19-minute suite; the round number is read from the driver's own
-    latest heartbeat record."""
+    """Append the exact test/suite figures to PROGRESS.jsonl so a reader
+    can diff them instead of re-running the suite; the round number is read
+    from the latest record already in the file."""
     import time
     p = REPO / "PROGRESS.jsonl"
     rnd = None
@@ -98,10 +96,10 @@ def parse_verify_dir(verify_dir):
 
 
 def parse_bnlj_allowlist():
-    src = (REPO / "src/test/scala/graft/PlanSweepSpec.scala").read_text()
+    src = (REPO / "src/test/scala/graft/InventoryLawSpec.scala").read_text()
     m = re.search(r"bnljAllowed\s*=\s*Map\((.*?)\)\n", src, re.S)
     if not m:
-        sys.exit("bnljAllowed map not found in PlanSweepSpec.scala")
+        sys.exit("bnljAllowed map not found in InventoryLawSpec.scala")
     return sorted(re.findall(r'"(\w+)"\s*->', m.group(1)))
 
 
@@ -144,20 +142,18 @@ def main():
           f"{len(allow)} BNLJ allowances ({', '.join(allow)})")
 
     ok = True
-    # all README spans anchored on HTML-comment markers (round-14 VERDICT
-    # residual: prose-anchored regexes silently unmatch under rewording —
-    # the MIGRATION.md lesson applied to every stamp)
+    # all README spans anchored on HTML-comment markers: prose-anchored
+    # regexes silently unmatch under rewording
     ok &= stamp("README.md", [
         (r"(?s)(<!-- stamp:tests -->).*?(<!-- /stamp:tests -->)",
          rf"\g<1>{n_tests}\g<2>"),
         (r"(?s)(<!-- stamp:bnlj -->).*?(<!-- /stamp:bnlj -->)",
          rf"\g<1>{len(allow)}\g<2>"),
         # the Verify/selfcheck bullet's oracled-of-registered pair
-        # (round-13 VERDICT "what's wrong" #1: it had drifted for rounds)
         (r"(?s)(<!-- stamp:oracled -->).*?(<!-- /stamp:oracled -->)",
          rf"\g<1>{len(oracles)} of {len(queries)}\g<2>"),
     ], args.check)
-    # PLANS.md BNLJ-inventory table (round-15 VERDICT #8): the derived
+    # PLANS.md BNLJ-inventory table: the derived
     # allowlist is stamped next to the hand-written per-query bound table,
     # so spec/prose drift fails --check
     ok &= stamp("PLANS.md", [
@@ -165,7 +161,7 @@ def main():
          rf"\g<1>{', '.join(allow)}\g<2>"),
     ], args.check)
     exc = len(queries) - len(oracles)
-    # anchored on HTML-comment markers (round-13 ADVICE #4) so editorial
+    # anchored on HTML-comment markers so editorial
     # rewording around the stamped span can never silently unmatch
     ok &= stamp("MIGRATION.md", [
         (r"(?s)(<!-- stamp:oracled -->).*?(<!-- /stamp:oracled -->)",
